@@ -1,52 +1,87 @@
-"""Hilbert cell codes as native Spark Column expressions.
+"""Hilbert cell codes as one native Spark Column expression per call.
 
-Same branch-free bitwise algorithm as
-``geos_spark.kernels.hilbert.hilbert_encode`` (reference semantics:
-``src/shape/fractal/HilbertCode.cpp:124-193``), expressed as a chain
-of integer Column ops so Catalyst/Tungsten codegens it — tile
-assignment stays entirely JVM-side. Intermediates are materialized as
-temporary projection columns (linear-size plan, no exponential
-expression blowup); a parity test checks every level against the
-numpy kernel.
+The curve is that of ``geos_spark.kernels.hilbert.hilbert_encode``
+(reference semantics: ``src/shape/fractal/HilbertCode.cpp:124-193``),
+run as its 4-state automaton: from the top bit down, each state maps
+the quadrant q = 2*(x bit) + (y bit) to a base-4 digit and a next
+state (``_TABLE``; ``tests/test_hilbert_native.py`` derives it from
+``hilbert_encode`` and checks every level against that function).
 
-uint32 semantics are emulated on LongType: every left-shift is masked
-with 0xFFFFFFFF; right shifts on non-negative longs are exact.
+Each call adds the cell with one SQL expression built by a single
+``F.expr``, so Catalyst/Tungsten codegens it into one projection and
+tile assignment stays JVM-side. A table lookup is an int shift: Java
+masks an int shift count to its low 5 bits, so a state kept as 8*s
+(plus ignored bits above bit 4) ORed with 2*q indexes the 2-bit slot
+4*s + q of a packed table constant with no masking. Every digit's text
+repeats the state chain above it (O(level^2) text); subexpression
+elimination evaluates each state once per row.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_M32 = 0xFFFFFFFF
+# state -> quadrant q = 2*xbit + ybit -> (digit, next state)
+_TABLE = (
+    ((0, 1), (1, 0), (3, 2), (2, 0)),
+    ((0, 0), (3, 3), (1, 1), (2, 1)),
+    ((2, 2), (1, 2), (3, 0), (0, 3)),
+    ((2, 3), (3, 1), (1, 3), (0, 2)),
+)
 
 
-def _shl(c: Column, n: int) -> Column:
-    return F.shiftleft(c, n).bitwiseAND(F.lit(_M32))
+def _packed(field: int) -> int:
+    """One field of ``_TABLE`` as a signed 32-bit int, slot 4*s + q."""
+    v = sum(
+        row[q][field] << 2 * (4 * s + q)
+        for s, row in enumerate(_TABLE)
+        for q in range(4)
+    )
+    return v - (1 << 32) if v >= 1 << 31 else v
 
 
-def _shr(c: Column, n: int) -> Column:
-    return F.shiftright(c, n)
+_DIGIT, _NEXT = _packed(0), _packed(1)
 
 
-def _interleave_steps(col: str, prefix: str) -> list[tuple[str, object]]:
-    """(x | x<<8)&0x00FF00FF ... as 4 chained temp columns."""
-    c = F.col(col)
-    steps = []
-    masks = [
-        (8, 0x00FF00FF),
-        (4, 0x0F0F0F0F),
-        (2, 0x33333333),
-        (1, 0x55555555),
-    ]
-    cur = c
-    for i, (sh, m) in enumerate(masks):
-        name = f"{prefix}_{i}"
-        steps.append(
-            (name, (cur.bitwiseOR(_shl(cur, sh))).bitwiseAND(F.lit(m)))
-        )
-        cur = F.col(name)
-    return steps
+def _name(col: str) -> str:
+    return "`" + col.replace("`", "``") + "`"
+
+
+def _bit(v: str, b: int, to: int) -> str:
+    """Bit b of int expression v moved to bit ``to``; other bits zero."""
+    if b > to:
+        v = f"({v} >> {b - to})"
+    elif b < to:
+        v = f"({v} << {to - b})"
+    return f"({v} & {1 << to})"
+
+
+def _check(level: int) -> None:
+    if not 1 <= level <= 16:
+        raise ValueError("Level out of range")
+
+
+def _cell_sql(x: str, y: str, level: int) -> str:
+    """Hilbert cell (bigint) of int grid-ordinate expressions x, y."""
+    _check(level)
+    state, digits = "0", []
+    for b in range(level - 1, -1, -1):
+        idx = f"({state} | {_bit(x, b, 2)} | {_bit(y, b, 1)})"
+        digits.append(f"(CAST((({_DIGIT}) >> {idx}) & 3 AS BIGINT) << {2 * b})")
+        state = f"((({_NEXT}) >> {idx}) << 3)"
+    return " | ".join(digits)
+
+
+def _num(v: float) -> str:
+    """A DOUBLE literal (a bare ``1.5`` would be DECIMAL)."""
+    return f"({float(v)!r}D)"
+
+
+def _grid_sql(v: str, lo: float, step: float, n: int) -> str:
+    """Tile ordinate (bigint) of double expression v: floor((v - lo) /
+    step) clamped to [0, n - 1]; bigint bounds keep type coercion out."""
+    return f"least({n - 1}L, greatest(0L, floor(({v} - {_num(lo)}) / {_num(step)})))"
 
 
 def with_hilbert_cell(
@@ -60,82 +95,8 @@ def with_hilbert_cell(
 
     x_col/y_col must already be grid ordinates in [0, 2^level).
     """
-    if level > 16:
-        raise ValueError("Level out of range")
-    t = "__h_"
-    cols: list[tuple[str, Column]] = []
-
-    def ref(n: str) -> Column:
-        return F.col(t + n)
-
-    def add(n: str, c: Column) -> None:
-        cols.append((t + n, c))
-
-    sh = 16 - level
-    add("x", _shl(F.col(x_col).cast("long"), sh) if sh else F.col(x_col).cast("long"))
-    add("y", _shl(F.col(y_col).cast("long"), sh) if sh else F.col(y_col).cast("long"))
-    x, y = ref("x"), ref("y")
-
-    # round 1 — prime with x, y. NOTE: Spark column names are
-    # case-insensitive, so lowercase/uppercase rounds get distinct
-    # prefixes (ra1 vs qa1).
-    add("ra1", x.bitwiseXOR(y))
-    a = ref("ra1")
-    add("rb1", a.bitwiseXOR(F.lit(0xFFFF)))
-    add("rc1", (x.bitwiseOR(y)).bitwiseXOR(F.lit(0xFFFF)))
-    add("rd1", x.bitwiseAND(y.bitwiseXOR(F.lit(0xFFFF))))
-    b, c, d = ref("rb1"), ref("rc1"), ref("rd1")
-    add("qa1", a.bitwiseOR(_shr(b, 1)))
-    add("qb1", _shr(a, 1).bitwiseXOR(a))
-    add("qc1", _shr(c, 1).bitwiseXOR(b.bitwiseAND(_shr(d, 1))).bitwiseXOR(c))
-    add("qd1", a.bitwiseAND(_shr(c, 1)).bitwiseXOR(_shr(d, 1)).bitwiseXOR(d))
-
-    prev = ("qa1", "qb1", "qc1", "qd1")
-    for rnd, s in ((2, 2), (3, 4)):
-        a, b, c, d = (ref(n) for n in prev)
-        ab = a.bitwiseXOR(b)
-        add(f"qa{rnd}", a.bitwiseAND(_shr(a, s)).bitwiseXOR(b.bitwiseAND(_shr(b, s))))
-        add(f"qb{rnd}", a.bitwiseAND(_shr(b, s)).bitwiseXOR(b.bitwiseAND(_shr(ab, s))))
-        add(f"qc{rnd}", c.bitwiseXOR(a.bitwiseAND(_shr(c, s)).bitwiseXOR(b.bitwiseAND(_shr(d, s)))))
-        add(f"qd{rnd}", d.bitwiseXOR(b.bitwiseAND(_shr(c, s)).bitwiseXOR(ab.bitwiseAND(_shr(d, s)))))
-        prev = (f"qa{rnd}", f"qb{rnd}", f"qc{rnd}", f"qd{rnd}")
-
-    a, b, c, d = (ref(n) for n in prev)
-    ab = a.bitwiseXOR(b)
-    add("qc4", c.bitwiseXOR(a.bitwiseAND(_shr(c, 8)).bitwiseXOR(b.bitwiseAND(_shr(d, 8)))))
-    add("qd4", d.bitwiseXOR(b.bitwiseAND(_shr(c, 8)).bitwiseXOR(ab.bitwiseAND(_shr(d, 8)))))
-    c4, d4 = ref("qc4"), ref("qd4")
-    add("fa", c4.bitwiseXOR(_shr(c4, 1)))
-    add("fb", d4.bitwiseXOR(_shr(d4, 1)))
-    add("i0", x.bitwiseXOR(y))
-    i0 = ref("i0")
-    add(
-        "i1",
-        ref("fb").bitwiseOR(
-            F.lit(0xFFFF).bitwiseXOR(i0.bitwiseOR(ref("fa")))
-        ),
-    )
-
-    # build all temps in one pass
-    out_df = df.withColumns(dict(cols[:2]))
-    # withColumns evaluates in parallel, so dependent temps need stages
-    for name, expr in cols[2:]:
-        out_df = out_df.withColumn(name, expr)
-
-    for name, expr in _interleave_steps(t + "i0", t + "il0"):
-        out_df = out_df.withColumn(name, expr)
-    for name, expr in _interleave_steps(t + "i1", t + "il1"):
-        out_df = out_df.withColumn(name, expr)
-
-    cell = _shr(
-        _shl(F.col(t + "il1_3"), 1).bitwiseOR(F.col(t + "il0_3")),
-        32 - 2 * level,
-    )
-    out_df = out_df.withColumn(out, cell)
-    drop = [n for n, _ in cols]
-    drop += [t + f"il0_{i}" for i in range(4)]
-    drop += [t + f"il1_{i}" for i in range(4)]
-    return out_df.drop(*drop)
+    x, y = (f"CAST({_name(c)} AS INT)" for c in (x_col, y_col))
+    return df.withColumn(out, F.expr(_cell_sql(x, y, level)))
 
 
 def with_tile_cells_exploded(
@@ -148,29 +109,24 @@ def with_tile_cells_exploded(
     keep_grid: bool = False,
 ) -> DataFrame:
     """Explode each row to every tile its (optionally padded) envelope
-    overlaps — fully native (sequence + explode + Hilbert chain), so it
-    is safe on join build sides and broadcast plans (a python UDF there
-    defeats codegen and costs seconds per stage).
+    overlaps — fully native (sequence + explode + one Hilbert
+    projection), so it is safe on join build sides and broadcast plans
+    (a python UDF there defeats codegen and costs seconds per stage).
     """
+    _check(level)
     minx, miny, maxx, maxy = extent
     n = 1 << level
-    sx = (maxx - minx) / n
-    sy = (maxy - miny) / n
-    xmin, ymin, xmax, ymax = (F.col(c) for c in bbox_cols)
-    if pad:
-        xmin, ymin = xmin - F.lit(pad), ymin - F.lit(pad)
-        xmax, ymax = xmax + F.lit(pad), ymax + F.lit(pad)
+    sx, sy = (maxx - minx) / n, (maxy - miny) / n
+    lo, hi = (f" - {_num(pad)}", f" + {_num(pad)}") if pad else ("", "")
 
-    def clamp(c: Column) -> Column:
-        return F.greatest(F.lit(0), F.least(F.lit(n - 1), c))
+    def tiles(c0: str, c1: str, origin: float, step: float):
+        a = _grid_sql(_name(c0) + lo, origin, step, n)
+        b = _grid_sql(_name(c1) + hi, origin, step, n)
+        return F.explode(F.expr(f"sequence({a}, {b})"))
 
-    gx0 = clamp(F.floor((xmin - F.lit(minx)) / F.lit(sx)))
-    gx1 = clamp(F.floor((xmax - F.lit(minx)) / F.lit(sx)))
-    gy0 = clamp(F.floor((ymin - F.lit(miny)) / F.lit(sy)))
-    gy1 = clamp(F.floor((ymax - F.lit(miny)) / F.lit(sy)))
-    tmp = (
-        df.withColumn("__gx", F.explode(F.sequence(gx0, gx1)))
-        .withColumn("__gy", F.explode(F.sequence(gy0, gy1)))
+    x0, y0, x1, y1 = bbox_cols
+    tmp = df.withColumn("__gx", tiles(x0, x1, minx, sx)).withColumn(
+        "__gy", tiles(y0, y1, miny, sy)
     )
     res = with_hilbert_cell(tmp, "__gx", "__gy", level, out)
     if keep_grid:
@@ -190,17 +146,14 @@ def with_tile_cell(
 
     Tiles partition the extent into 2^level x 2^level squares; grid
     ordinates are clamped to [0, 2^level - 1] so boundary/outside
-    points land in the edge tiles.
+    points land in the edge tiles. The grid math and the cell are one
+    expression.
     """
+    _check(level)
     minx, miny, maxx, maxy = extent
     n = 1 << level
-    sx = (maxx - minx) / n
-    sy = (maxy - miny) / n
-    gx = F.floor((F.col(x_col) - F.lit(minx)) / F.lit(sx))
-    gy = F.floor((F.col(y_col) - F.lit(miny)) / F.lit(sy))
-    gx = F.greatest(F.lit(0), F.least(F.lit(n - 1), gx))
-    gy = F.greatest(F.lit(0), F.least(F.lit(n - 1), gy))
-    tmp = df.withColumn("__gx", gx).withColumn("__gy", gy)
-    return with_hilbert_cell(tmp, "__gx", "__gy", level, out).drop(
-        "__gx", "__gy"
+    x, y = (
+        f"CAST({_grid_sql(_name(c), o, (hi - o) / n, n)} AS INT)"
+        for c, o, hi in ((x_col, minx, maxx), (y_col, miny, maxy))
     )
+    return df.withColumn(out, F.expr(_cell_sql(x, y, level)))

@@ -85,7 +85,7 @@ def _ords(side, n, i):
     return None if math.isnan(v) else v
 
 
-def _extract_strings(g: G.Geom) -> list[_NStr]:
+def _extract_strings(g: G.Geom) -> tuple[list[_NStr], bool, bool]:
     """Linework of ``g`` as segment strings (SegmentStringUtil::
     extractSegmentStrings: line parts + polygon rings; points ignored;
     curved types unsupported)."""

@@ -13,6 +13,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _host_cores() -> int:
+    """CPUs this process may run on (the affinity mask, like nproc)."""
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
+def _host_driver_memory() -> str:
+    """Half of physical memory (MemTotal), in whole GiB, at least 1g:
+    in local mode the driver JVM also hosts every executor task."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, total // 2**31)}g"
+
+
 def get_spark(
     app_name: str = "geos_spark",
     cores: int | None = None,
@@ -21,7 +35,7 @@ def get_spark(
     master: str | None = None,
 ) -> SparkSession:
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = int(os.environ.get("SPARK_GRAFT_CPUS") or _host_cores())
     if shuffle_partitions is None:
         # 2x cores locally; on a real cluster this scales with executors
         shuffle_partitions = max(2 * cores, 8)
@@ -41,7 +55,10 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_ARROW_BATCH", "65536"),
         )
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _host_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

@@ -197,3 +197,18 @@ def test_st_node_and_srid_udfs(spark):
     # curved input nulls out (GEOSNodeTest case 9), null stays null
     assert out[1].noded is None
     assert out[2].noded is None and out[2].srid is None
+
+
+def test_st_srid_malformed_row_nulls_out(spark):
+    """One malformed WKB row yields NULL; the stage does not fail."""
+    from pyspark.sql import functions as F
+
+    from geos_spark.functions import st
+
+    good = write_ewkb(parse_wkt("POINT (1 2)"), srid=4326)
+    bad = b"\x01\x01\x00\x00"  # truncated point
+    df = spark.createDataFrame(
+        [(0, bytearray(good)), (1, bytearray(bad)), (2, None)], "id int, g binary"
+    )
+    got = dict(df.select("id", st.st_srid(F.col("g")).alias("s")).collect())
+    assert got == {0: 4326, 1: None, 2: None}
